@@ -868,19 +868,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.withColumn("component_size", F.count(F.lit(1)).over(w))
 
 
-def _materialized(df: DataFrame) -> DataFrame:
-    """persist(MEMORY_AND_DISK) + force-compute, so every later reader
-    (including two union branches inside ONE job) hits cached blocks
-    instead of racing to recompute the expensive subtree.  Unlike an
-    eager ``localCheckpoint`` the blocks are released the moment the
-    caller ``unpersist``s — checkpoint RDD blocks stay pinned until
-    driver GC collects the handle, which is exactly the block-churn
-    source behind the r6 1-in-3 latency spike in dedup_components."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
-
-
 def _cc_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs stay LAZY: _components_from_pairs reads them exactly once
     # (single-explode symmetrization, r8), so the expensive LSH subtree

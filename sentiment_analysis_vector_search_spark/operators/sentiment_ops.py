@@ -479,18 +479,6 @@ _SUMMARY_TOP_N = 10
 _SUMMARY_MAX_CHARS = 6000
 
 
-def _summary_template(sent_upper: str, combined: str, sent_lower: str) -> str:
-    # mirrors create_summary_prompt's f-string layout
-    return (
-        f"Analyze the following {sent_upper} comments from customer reviews and "
-        f"provide a concise summary in EXACTLY 2-3 sentences.\n\n"
-        f"{sent_upper} COMMENTS:\n{combined}\n\n"
-        f"Write a brief summary (2-3 sentences ONLY) explaining what aspects the "
-        f"commenters found {sent_lower}. Focus on the main themes and common "
-        f"patterns.\n\nSummary:"
-    )
-
-
 _SUMMARIZE_ORACLE = f"""
 WITH {S.SQL_CLASSIFIED_CTE},
 top_c AS (

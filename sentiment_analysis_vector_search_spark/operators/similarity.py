@@ -886,8 +886,8 @@ def ivf_index_add(
 #   4. remove the marker
 # ivf_index_recover rolls FORWARD when the marker exists (the new index
 # is complete by invariant 1) and rolls BACK stray __new dirs when it
-# does not (the swap never committed). The SCD2 bucket-swap protocol,
-# lifted to a two-directory artifact (file_sink.py:1107 precedent).
+# does not (the swap never committed). The SCD2 bucket-swap protocol
+# (file_sink.stream_scd2_maintenance), lifted to a two-directory artifact.
 #
 # Writer/reader contract (r12 advice): rollback is a WRITER action —
 # only the refresh itself (the single writer; refreshes must not run

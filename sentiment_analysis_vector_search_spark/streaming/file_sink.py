@@ -23,14 +23,79 @@ checkpoint dir lives on durable shared storage; partitionBy(lang) keeps
 reads prunable. Readers must go through ``read_file_sink`` (or any
 _spark_metadata-aware reader) so half-written files from a crashed batch
 are invisible.
+
+Drain skeleton. Every ``stream_*`` function below has the same shape. A
+file source (``stream_ops._file_stream``: a glob over one directory,
+optionally one file per micro-batch) feeds a per-batch fold through
+``foreachBatch``, and ``stream_ops._drain`` runs the query as one
+``availableNow`` drain checkpointed at ``checkpoint_dir``. The source's
+offset log makes a repeated call resume after the last committed batch,
+so each drain picks up only newly landed files. Only the fold differs
+from function to function.
+
+Batch-record protocol. A micro-batch that was in flight when a drain
+died is re-delivered byte-identical by the next drain, so a fold whose
+effect is not idempotent keeps a record of the batch ids it applied.
+File-source batch ids are monotone, so the record is one bounded
+integer, ``{"max_applied": N}``: a batch is applied iff its id <= N, and
+a legacy list record reads as its max. A fold keeps the record in one of
+three places:
+
+- a ``_<tag>_commits.json`` file in the checkpoint dir. ``_batch_applied``
+  reads it; ``_record_batch`` writes it to a temp file and ``os.replace``s
+  it in, so a crash mid-write leaves the previous record, never torn
+  JSON. The effect lands first and the record after it, so a crash
+  between the two replays the batch. The vector-index loops close that
+  window by appending through ``_idempotent_append_dir``: a replay
+  rewrites the same file names instead of adding new ones.
+- inside the maintained artifact (stats sketches, the text-index
+  manifest, SCD2 buckets). Effect and record then commit in one
+  ``os.replace``, so there is no window at all.
+- nowhere, when the effect is idempotent per batch (CDC apply).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .stream_ops import _DOC_SCHEMA, _stream_confs
+from .stream_ops import _DOC_SCHEMA, _drain, _file_stream
+
+
+def _read_max_applied(path: str) -> int:
+    """Highest batch id the record at ``path`` holds (-1 if none). Reads
+    the bounded ``{"max_applied": N}`` form; legacy list records read as
+    their max."""
+    if not os.path.exists(path):
+        return -1
+    with open(path) as fh:
+        rec = json.load(fh)
+    if isinstance(rec, list):
+        return max(rec, default=-1)
+    return int(rec["max_applied"])
+
+
+def _commits_path(checkpoint_dir: str, tag: str) -> str:
+    return os.path.join(checkpoint_dir, f"_{tag}_commits.json")
+
+
+def _batch_applied(checkpoint_dir: str, tag: str, batch_id: int) -> bool:
+    """True when the ``tag`` drain already recorded ``batch_id`` (a replay)."""
+    return batch_id <= _read_max_applied(_commits_path(checkpoint_dir, tag))
+
+
+def _record_batch(checkpoint_dir: str, tag: str, batch_id: int) -> None:
+    """Record ``batch_id`` as applied: temp write, then atomic replace."""
+    path = _commits_path(checkpoint_dir, tag)
+    tmp = f"{path}.__tmp__"
+    with open(tmp, "w") as fh:
+        json.dump({"max_applied": max(_read_max_applied(path), batch_id)}, fh)
+    os.replace(tmp, path)
 
 
 def stream_ingest_documents(
@@ -43,11 +108,7 @@ def stream_ingest_documents(
     with exactly-once checkpointing (availableNow trigger)."""
     from ..operators.pipeline_ops import gate_columns
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, "documents.parquet", _DOC_SCHEMA, False)
     gated = src.select(
         "doc_id",
         "text",
@@ -56,18 +117,15 @@ def stream_ingest_documents(
         "n_chars",
         gate_columns()["keep"].alias("keep"),
     ).where(F.col("keep"))
-    with _stream_confs(spark):
-        q = (
-            gated.drop("keep")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .partitionBy("lang")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        gated.drop("keep")
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .partitionBy("lang")
+        .outputMode("append"),
+        checkpoint_dir,
+    )
 
 
 def read_file_sink(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -91,17 +149,11 @@ def stream_rollup_maintenance(
     merge_upsert rewrites just those partitions), so maintenance cost
     follows the batch's day-spread, not table size.
 
-    Exactly-once: the source checkpoint gives at-least-once batch
-    delivery, and a RECORDED-BATCH-ID guard (the canonical foreachBatch
-    idempotent-write pattern) makes the additive merge safe under
-    replay — adding a replayed batch into the prior state without the
-    guard would double-count, since the prior already contains it. The
-    aggregate state is sum/count-combinable so prior+batch recombines
-    exactly (decimal value sums).
+    Exactly-once: the merge is additive (prior state + batch), so a
+    replayed batch would double-count; the commits-file record skips it.
+    The aggregate state is sum/count-combinable so prior+batch
+    recombines exactly (decimal value sums).
     """
-    import json
-    import os
-
     from ..catalog import normalize_event_ts, read_events_raw
     from ..sinks import merge_upsert
 
@@ -109,20 +161,12 @@ def stream_rollup_maintenance(
     # growing-source glob: a continuous ingest lands NEW files
     # (events_<ts>.parquet) next to the seed — the FileStreamSource
     # tracks processed files, so each drain picks up only the additions.
-    src = (
-        spark.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .parquet(sf_dir)
+    ev = normalize_event_ts(
+        _file_stream(spark, sf_dir, "events*.parquet", raw.schema, False)
     )
-    ev = normalize_event_ts(src)
-    commits_path = os.path.join(checkpoint_dir, "_rollup_commits.json")
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
+        if _batch_applied(checkpoint_dir, "rollup", batch_id):
             return  # replayed batch: already merged, skip (idempotence)
         day_agg = (
             batch_df.groupBy(
@@ -168,17 +212,9 @@ def stream_rollup_maintenance(
                 keys=["day", "event_type"],
                 partition_col="day",
             )
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
+        _record_batch(checkpoint_dir, "rollup", batch_id)
 
-    with _stream_confs(spark):
-        q = (
-            ev.writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, ev.writeStream.foreachBatch(upsert_batch), checkpoint_dir)
 
 
 def _idempotent_append_dir(stage_dir: str, target_dir: str, batch_id: int) -> None:
@@ -202,14 +238,12 @@ def _idempotent_append_dir(stage_dir: str, target_dir: str, batch_id: int) -> No
     (r6 advice). A copy+fsync+replace fallback still guards the
     unexpected cross-device case.
     """
-    import os
 
     def _promote(src: str, dst: str) -> None:
         try:
             os.replace(src, dst)
         except OSError as e:
             import errno
-            import shutil
 
             if e.errno != errno.EXDEV:
                 raise
@@ -236,6 +270,47 @@ def _idempotent_append_dir(stage_dir: str, target_dir: str, batch_id: int) -> No
             )
 
 
+def _stream_vector_ingest(
+    spark: SparkSession,
+    src_dir: str,
+    index_dir: str,
+    checkpoint_dir: str,
+    add: Callable[..., object],
+    tag: str,
+    target: str,
+) -> None:
+    """The loop shared by the IVF / PQ / IVFPQ ingests: each micro-batch
+    of embeddings is staged by ``add`` (an ``*_index_add`` taking
+    ``stage_dir``) under ``_stage_<tag>_<batch>``, promoted into
+    ``index_dir/target`` by batch-stamped renames, then recorded under
+    ``tag`` — exactly-once even across a crash mid-append."""
+    src = _file_stream(
+        spark,
+        src_dir,
+        "embeddings*.parquet",
+        spark.read.parquet(src_dir).schema,
+        False,
+    )
+
+    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if _batch_applied(checkpoint_dir, tag, batch_id):
+            return  # replayed batch is already in the index
+        stage = os.path.join(index_dir, f"_stage_{tag}_{batch_id}")
+        add(
+            spark,
+            index_dir,
+            batch_df.select(
+                "vec_id", F.col("embedding").cast("array<double>").alias("v")
+            ),
+            stage_dir=stage,
+        )
+        _idempotent_append_dir(stage, os.path.join(index_dir, target), batch_id)
+        _record_batch(checkpoint_dir, tag, batch_id)
+        shutil.rmtree(stage, ignore_errors=True)
+
+    _drain(spark, src.writeStream.foreachBatch(add_batch), checkpoint_dir)
+
+
 def stream_ivf_ingest(
     spark: SparkSession,
     src_dir: str,
@@ -255,59 +330,17 @@ def stream_ivf_ingest(
     (``build_ivf_index`` over the seed corpus, or copy one in); re-train
     it only when drift warrants — the classic IVF operating procedure.
 
-    Exactly-once: the source checkpoint replays whole micro-batches, and
-    since ``ivf_index_add`` APPENDS into cell partitions a replay would
-    duplicate vectors — the recorded-batch-id guard (same pattern as
-    ``stream_rollup_maintenance``) skips replayed batches, and (r6) the
-    staged batch-stamped-rename append closes the remaining crash window
-    between the append and the commit record.
+    Exactly-once: ``ivf_index_add`` APPENDS into cell partitions, so the
+    commits-file record skips replayed batches, and the staged
+    batch-stamped-rename append closes the crash window between the
+    append and the record.
     """
-    import json
-    import os
-
     from ..operators.similarity import ivf_index_add
 
-    src_schema = spark.read.parquet(src_dir).schema
-    src = (
-        spark.readStream.schema(src_schema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
+    _stream_vector_ingest(
+        spark, src_dir, index_dir, checkpoint_dir,
+        ivf_index_add, "ivf", "assignments",
     )
-    commits_path = os.path.join(checkpoint_dir, "_ivf_commits.json")
-
-    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch is already in the index
-        # stage → batch-stamped atomic renames → record: exactly-once
-        # even across a crash mid-append (see _idempotent_append_dir).
-        stage = os.path.join(index_dir, f"_stage_ivf_{batch_id}")
-        ivf_index_add(
-            spark,
-            index_dir,
-            batch_df.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ),
-            stage_dir=stage,
-        )
-        _idempotent_append_dir(stage, f"{index_dir}/assignments", batch_id)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(add_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 def stream_pq_ingest(
@@ -326,57 +359,13 @@ def stream_pq_ingest(
     so ingest cost is one broadcast-codebook encode pass per batch.
     Frozen codebooks make each batch's codes reproducible → the streamed
     index stays IDENTICAL to a full rebuild (pinned by pytest).
-    Exactly-once (r6): recorded-batch-id guard PLUS the staged
-    idempotent append — codes land via batch-stamped atomic renames, so
-    a crash between the append and the commit record no longer leaves
-    duplicates for the replay to compound (pytest-pinned replay test).
+    Exactly-once as ``stream_ivf_ingest`` (pytest-pinned replay test).
     """
-    import json
-    import os
-
     from ..operators.similarity2 import pq_index_add
 
-    src_schema = spark.read.parquet(src_dir).schema
-    src = (
-        spark.readStream.schema(src_schema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
+    _stream_vector_ingest(
+        spark, src_dir, index_dir, checkpoint_dir, pq_index_add, "pq", "codes"
     )
-    commits_path = os.path.join(checkpoint_dir, "_pq_commits.json")
-
-    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch is already in the index
-        # stage → batch-stamped atomic renames → record: exactly-once
-        # even across a crash mid-append (see _idempotent_append_dir).
-        stage = os.path.join(index_dir, f"_stage_pq_{batch_id}")
-        pq_index_add(
-            spark,
-            index_dir,
-            batch_df.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ),
-            stage_dir=stage,
-        )
-        _idempotent_append_dir(stage, f"{index_dir}/codes", batch_id)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(add_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 def stream_ivfpq_ingest(
@@ -394,52 +383,13 @@ def stream_ivfpq_ingest(
     pays one broadcast assign + one broadcast encode and the serving
     reader keeps its static cell pruning. Frozen codebooks make every
     batch reproducible → the streamed index stays IDENTICAL to a full
-    rebuild (pinned by pytest). Exactly-once: recorded-batch-id guard
-    plus the staged batch-stamped-rename append, the shared protocol."""
-    import json
-    import os
-
+    rebuild (pinned by pytest). Exactly-once as ``stream_ivf_ingest``."""
     from ..operators.ivfpq import ivfpq_index_add
 
-    src_schema = spark.read.parquet(src_dir).schema
-    src = (
-        spark.readStream.schema(src_schema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
+    _stream_vector_ingest(
+        spark, src_dir, index_dir, checkpoint_dir,
+        ivfpq_index_add, "ivfpq", "codes",
     )
-    commits_path = os.path.join(checkpoint_dir, "_ivfpq_commits.json")
-
-    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch is already in the index
-        stage = os.path.join(index_dir, f"_stage_ivfpq_{batch_id}")
-        ivfpq_index_add(
-            spark,
-            index_dir,
-            batch_df.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ),
-            stage_dir=stage,
-        )
-        _idempotent_append_dir(stage, f"{index_dir}/codes", batch_id)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(add_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 def stream_ingest_dedup(
@@ -462,32 +412,25 @@ def stream_ingest_dedup(
     corpus size. Within-batch duplicates are resolved first (exact
     min-doc_id per content hash), then history decides.
 
-    Exactly-once: foreachBatch with a recorded-batch-id guard (as the
-    rollup/IVF loops) — a replayed batch neither re-appends survivors
-    nor re-inserts signatures.
+    Exactly-once: the commits-file record keeps a replayed batch from
+    re-appending survivors or re-inserting signatures.
     """
-    import json
-    import os
-
     from ..functions.hashing import md5_long
-    from ..operators.dedup_index import dedup_index_add, dedup_index_check
+    from ..operators.dedup_index import (
+        build_dedup_index,
+        dedup_index_add,
+        dedup_index_check,
+    )
 
     if jaccard_t is None:
         from ..operators.dedup import _JACCARD_T as jaccard_t
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", "documents*.parquet")
-        .parquet(src_dir)
-    )
-    commits_path = os.path.join(checkpoint_dir, "_ingest_commits.json")
+    # one source file per batch: near-dups that land in different files
+    # before one drain are still gated against each other via the index
+    src = _file_stream(spark, src_dir, "documents*.parquet", _DOC_SCHEMA, True)
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
+        if _batch_applied(checkpoint_dir, "ingest", batch_id):
             return
         # within-batch exact dedup: keep min doc_id per content hash
         h = batch_df.withColumn("_h", md5_long(F.col("text")))
@@ -510,21 +453,10 @@ def stream_ingest_dedup(
         if os.path.isdir(f"{index_dir}/bands"):
             dedup_index_add(spark, survivors, index_dir)
         else:
-            from ..operators.dedup_index import build_dedup_index
-
             build_dedup_index(spark, survivors, index_dir)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
+        _record_batch(checkpoint_dir, "ingest", batch_id)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .option("maxFilesPerTrigger", "1")  # one source file per batch
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(gate_batch), checkpoint_dir)
 
 
 def stream_stats_maintenance(
@@ -542,36 +474,21 @@ def stream_stats_maintenance(
     gates read (``load_table_stats`` surface) — the ANALYZE never
     re-reads the table, which is the whole scalable-maintenance story.
 
-    Exactly-once, with NO crash window (r8 advice, medium): the stats
-    merge is ADDITIVE (counts sum, sketches union), so a replayed batch
-    would double-count — and a commit record written AFTER the fold
-    (the old separate commits file) left exactly that window. The
-    applied-batch record now rides inside the stats JSON itself
-    (``incremental_analyze(batch_id=...)``): fold and record are one
-    os.replace, so a crash either committed the batch fully or not at
-    all, and the replay check reads the same file it would update."""
+    Exactly-once: the stats merge is ADDITIVE (counts sum, sketches
+    union), so the applied-batch record rides inside the stats JSON
+    itself (``incremental_analyze(batch_id=...)``) — fold and record are
+    one os.replace, and the replay check reads the same file it would
+    update."""
     from ..stats import incremental_analyze
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, f"{table_name}*.parquet", _DOC_SCHEMA, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         incremental_analyze(
             spark, stats_dir, table_name, batch_df, k=kmv_k, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def stream_emb_dedup_ingest(
@@ -589,18 +506,13 @@ def stream_emb_dedup_ingest(
     in the parquet table AND join the index. Within-batch dups are
     resolved first (min vec_id per batch-internal near-dup pair via the
     batch candidate generator), then history decides. Exactly-once via
-    the recorded-batch-id guard, as every foreachBatch loop here."""
-    import json
-    import os
-
-    from ..operators.dedup import emb_candidate_pairs
+    the commits-file record, as ``stream_ingest_dedup``."""
+    from ..operators.dedup import _EMB_T, emb_candidate_pairs
     from ..operators.emb_index import (
         build_emb_index,
         emb_index_add,
         emb_index_check,
     )
-
-    from ..operators.dedup import _EMB_T
 
     if cosine_t is None:
         cosine_t = _EMB_T
@@ -616,19 +528,16 @@ def stream_emb_dedup_ingest(
             "dedup._EMB_T (rebuild the index) to loosen the pipeline"
         )
 
-    src = (
-        spark.readStream.schema("vec_id bigint, embedding array<double>")
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
+    src = _file_stream(
+        spark,
+        src_dir,
+        "embeddings*.parquet",
+        "vec_id bigint, embedding array<double>",
+        False,
     )
-    commits_path = os.path.join(checkpoint_dir, "_emb_ingest_commits.json")
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
+        if _batch_applied(checkpoint_dir, "emb_ingest", batch_id):
             return
         batch = batch_df.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -659,17 +568,9 @@ def stream_emb_dedup_ingest(
             emb_index_add(spark, survivors, index_dir)
         else:
             build_emb_index(spark, survivors, index_dir)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
+        _record_batch(checkpoint_dir, "emb_ingest", batch_id)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(gate_batch), checkpoint_dir)
 
 
 def stream_bloom_maintenance(
@@ -687,47 +588,26 @@ def stream_bloom_maintenance(
     lookups stay file-pruned as the table grows, and maintenance cost is
     O(batch), never a table rescan.
 
-    Exactly-once: the table append uses the recorded-batch-id guard
-    (replayed batches would otherwise append duplicate files);
-    ``bloom_index_add`` itself is idempotent by construction — it
-    indexes the file-listing DIFF, so a crash between append and add is
-    healed by the next batch's add."""
-    import json
-    import os
-
+    Exactly-once: the batch is recorded right after the table append,
+    BEFORE the index fold (replayed batches would otherwise append
+    duplicate files). ``bloom_index_add`` itself is idempotent by
+    construction — it indexes the file-listing DIFF, so a crash between
+    the record and the add is healed by the next batch's add."""
     from ..bloom import bloom_index_add, build_bloom_index
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    commits_path = os.path.join(checkpoint_dir, "_bloom_commits.json")
+    src = _file_stream(spark, src_dir, glob, _DOC_SCHEMA, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
+        if _batch_applied(checkpoint_dir, "bloom", batch_id):
             return  # replayed batch: files already appended + indexed
         batch_df.write.mode("append").parquet(table_dir)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
+        _record_batch(checkpoint_dir, "bloom", batch_id)
         if not os.path.exists(os.path.join(index_dir, "manifest.json")):
             build_bloom_index(spark, table_dir, key_col, index_dir)
         else:
             bloom_index_add(spark, table_dir, index_dir)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def stream_text_index_maintenance(
@@ -743,25 +623,13 @@ def stream_text_index_maintenance(
     a posting's state (tf, dl) depends only on its own document, queries
     after any number of batches are byte-identical to a full rebuild.
 
-    Exactly-once, with NO crash window (r8 advice, medium): the batch's
-    postings land via stage -> batch-stamped atomic renames (the
-    `_idempotent_append_dir` protocol the IVF/PQ loops use — a replay
-    re-stages the same deterministic files and re-replaces the same
-    names), and the counter bump + applied-batch record travel in ONE
-    manifest os.replace. The old shape (append postings, bump counters,
-    THEN write a separate commits file) replayed the whole batch on a
-    crash in between, permanently inflating tf/df/N."""
-    import os
-    import shutil
-
+    Exactly-once, with NO crash window: the batch's postings land via
+    stage -> batch-stamped atomic renames (``_idempotent_append_dir``),
+    and the counter bump + applied-batch record travel in ONE manifest
+    os.replace, so a crash can never re-add a batch's tf/df/N."""
     from ..operators.text_index import _read_manifest, _write_manifest, text_index_add
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    src = _file_stream(spark, src_dir, glob, _DOC_SCHEMA, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not os.path.exists(os.path.join(index_dir, "manifest.json")):
@@ -783,14 +651,7 @@ def stream_text_index_maintenance(
         )
         shutil.rmtree(stage, ignore_errors=True)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def stream_hot_keys_maintenance(
@@ -811,31 +672,18 @@ def stream_hot_keys_maintenance(
     re-reading the table (the same scalable-maintenance story as
     ``stream_stats_maintenance``).
 
-    Exactly-once with NO crash window: MG counts are additive, so the
-    applied-batch record rides inside the sketch JSON's single
-    os.replace (fold and record commit together, r9 protocol)."""
+    Exactly-once: MG counts are additive, so the applied-batch record
+    rides inside the sketch JSON's single os.replace."""
     from ..stats import incremental_heavy_hitters
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, f"{table_name}*.parquet", _DOC_SCHEMA, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         incremental_heavy_hitters(
             stats_dir, table_name, col, batch_df, k=k, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def stream_cdc_apply(
@@ -853,13 +701,10 @@ def stream_cdc_apply(
     follows the batch's partition spread, not table size (the
     merge_upsert maintenance story, extended to deletes).
 
-    Exactly-once WITHOUT a commit record: ``apply_cdc`` is idempotent
-    per identical batch — last-wins keyed on ``_seq``, upserts replace
-    the same rows, deletes of absent keys are no-ops — and the
-    checkpointed file source re-delivers a crashed batch byte-identical.
-    A replay therefore converges to the same table state (the
-    "idempotent effect" leg of the r9 atomic-commit protocol; no
-    effect-then-record crash window exists because there is no record)."""
+    Exactly-once WITHOUT a record: ``apply_cdc`` is idempotent per
+    identical batch — last-wins keyed on ``_seq``, upserts replace the
+    same rows, deletes of absent keys are no-ops — so a re-delivered
+    batch converges to the same table state."""
     from ..sinks import apply_cdc
 
     # probe under the SAME glob the stream reads (r9 advice): a stray
@@ -869,12 +714,7 @@ def stream_cdc_apply(
     probe = (
         spark.read.option("pathGlobFilter", "cdc_*.parquet").parquet(cdc_dir)
     )
-    src = (
-        spark.readStream.schema(probe.schema)
-        .option("pathGlobFilter", "cdc_*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one CDC file per batch
-        .parquet(cdc_dir)
-    )
+    src = _file_stream(spark, cdc_dir, "cdc_*.parquet", probe.schema, True)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -884,14 +724,7 @@ def stream_cdc_apply(
             partition_col=partition_col,
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def stream_sample_maintenance(
@@ -917,12 +750,7 @@ def stream_sample_maintenance(
     record inside the artifact's single atomic write; SCALING rule 21)."""
     from ..stats import incremental_sample
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, f"{table_name}*.parquet", _DOC_SCHEMA, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         incremental_sample(
@@ -930,14 +758,7 @@ def stream_sample_maintenance(
             k=k, batch_id=batch_id,
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def stream_cms_maintenance(
@@ -959,31 +780,18 @@ def stream_cms_maintenance(
     incremental_analyze (KMV), incremental_heavy_hitters (MG) and
     incremental_sample (bottom-k).
 
-    Exactly-once with NO crash window: CMS counters are additive, so
-    the applied-batch record rides inside the sketch JSON's single
-    os.replace (fold and record commit together, r9 protocol)."""
+    Exactly-once: CMS counters are additive, so the applied-batch
+    record rides inside the sketch JSON's single os.replace."""
     from ..stats import incremental_cms
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, f"{table_name}*.parquet", _DOC_SCHEMA, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         incremental_cms(
             stats_dir, table_name, col, batch_df, d=d, w=w, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def stream_histogram_maintenance(
@@ -1007,9 +815,8 @@ def stream_histogram_maintenance(
     the sixth maintained artifact next to KMV / MG / bottom-k / CMS /
     checksum.
 
-    Exactly-once with no crash window: counts are additive, so the
-    bounded ``max_applied`` record rides inside the artifact JSON's
-    single os.replace (the incremental_cms protocol, SCALING rule 35).
+    Exactly-once: counts are additive, so the ``max_applied`` record
+    rides inside the artifact JSON's single os.replace (SCALING rule 35).
 
     ``offset`` shifts the support (stats-derived knobs, r12 verdict #4);
     ``group_col`` maintains the GROUPED artifact instead (r13 — per-group
@@ -1020,12 +827,7 @@ def stream_histogram_maintenance(
     w = st.HIST_WIDTH if width is None else width
     b = st.HIST_BINS if bins is None else bins
     raw = read_events_raw(spark, sf_dir)
-    src = (
-        spark.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, "events*.parquet", raw.schema, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1041,14 +843,7 @@ def stream_histogram_maintenance(
                 bins=b, batch_id=batch_id, offset=offset,
             )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def stream_checksum_maintenance(
@@ -1068,18 +863,12 @@ def stream_checksum_maintenance(
     #6 loop (shard checksums fold incrementally like the other
     maintained artifacts).
 
-    Exactly-once with NO crash window: the digest and row count are
-    additive, so the applied-batch record rides inside the manifest
-    JSON's single os.replace (fold and record commit together, the
-    incremental_cms protocol)."""
+    Exactly-once: the digest and row count are additive, so the
+    applied-batch record rides inside the manifest JSON's single
+    os.replace."""
     from ..operators.dq import incremental_checksum
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, f"{table_name}*.parquet", _DOC_SCHEMA, True)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Empty micro-batches fold to (0, 0) safely since checksum_agg
@@ -1092,14 +881,7 @@ def stream_checksum_maintenance(
             manifest_dir, table_name, batch_df, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def check_scd_meta(scd_dir: str, n_buckets: int) -> None:
@@ -1113,9 +895,6 @@ def check_scd_meta(scd_dir: str, n_buckets: int) -> None:
     underscore name is invisible to parquet readers); every later
     writer fails fast on a mismatch. A pre-existing dimension with no
     meta (built before this check) adopts the caller's value."""
-    import json
-    import os
-
     meta_path = os.path.join(scd_dir.rstrip("/"), "_scd_meta.json")
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
@@ -1160,30 +939,20 @@ def stream_scd2_maintenance(
     assumption). Out-of-order arrivals need a rebuild from the log
     (the batch query), exactly like any SCD2 warehouse load.
 
-    (Local imports keep the module's streaming-only import surface.)
-
-    Exactly-once: the merge is NOT idempotent (re-extending an open row
-    against an already-applied batch would mis-close it), so each
-    rewritten bucket directory carries an ``_applied.json`` batch-id
-    record INSIDE the same atomic directory swap — a crashed batch
-    re-delivers byte-identical (checkpointed file source) and skips the
-    buckets whose swap already landed, applying only the missing ones
-    (per-bucket exactly-once; SCALING rule 21's record-inside-artifact
-    leg, per partition). The record stores only the MAX applied batch id
-    (file-source batch ids are monotone, so "applied" == "<= max") —
-    bounded state on an unbounded stream; legacy list-form records read
-    as their max. The swap itself is two renames, so it is made
-    crash-recoverable (r10 advice, medium): the displaced directory gets
-    the DETERMINISTIC name ``bucket=N__old`` and ``_recover_swaps``
-    runs before every batch — a bucket=N__old with no bucket=N means
-    the crash hit between the renames (restore it); with both present
-    the second rename landed (drop the leftover). A ``_scd_meta.json``
-    at the table root records n_buckets at first write; a later apply
-    with a different --buckets fails fast instead of silently merging
-    against a mismatched pmod layout (r10 advice, low)."""
-    import json
-    import os
-    import shutil
+    Exactly-once, per bucket: the merge is NOT idempotent (re-extending
+    an open row against an already-applied batch would mis-close it), so
+    each rewritten bucket directory carries an ``_applied.json`` record
+    INSIDE the same directory swap, and a re-delivered batch applies
+    only the buckets whose swap had not landed. The swap itself is two
+    renames, so it is made crash-recoverable (r10 advice, medium): the
+    displaced directory gets the DETERMINISTIC name ``bucket=N__old``
+    and ``_recover_swaps`` runs before every batch — a bucket=N__old
+    with no bucket=N means the crash hit between the renames (restore
+    it); with both present the second rename landed (drop the
+    leftover). A ``_scd_meta.json`` at the table root records n_buckets
+    at first write; a later apply with a different --buckets fails fast
+    instead of silently merging against a mismatched pmod layout (r10
+    advice, low)."""
     import uuid as _uuid
 
     from pyspark.sql import Window as W
@@ -1194,29 +963,14 @@ def stream_scd2_maintenance(
     probe = spark.read.option("pathGlobFilter", "events*.parquet").parquet(
         src_dir
     )
-    src = (
-        spark.readStream.schema(probe.schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    src = _file_stream(spark, src_dir, "events*.parquet", probe.schema, True)
 
     base = scd_dir.rstrip("/")
     cols = ["user_id", "state", "valid_from", "valid_to", "is_current"]
     check_scd_meta(base, n_buckets)
 
     def _bucket_max(bdir: str) -> int:
-        """Highest batch id applied to this bucket (-1 if none). Reads
-        the bounded {"max_applied": N} record; legacy list records
-        (pre-r11) collapse to their max."""
-        p = os.path.join(bdir, "_applied.json")
-        if os.path.exists(p):
-            with open(p) as fh:
-                rec = json.load(fh)
-            if isinstance(rec, list):
-                return max(rec) if rec else -1
-            return int(rec["max_applied"])
-        return -1
+        return _read_max_applied(os.path.join(bdir, "_applied.json"))
 
     def _recover_swaps() -> None:
         """Repair any bucket directory swap a crash left half-done."""
@@ -1382,11 +1136,4 @@ def stream_scd2_maintenance(
         shutil.rmtree(tmp, ignore_errors=True)
 
     _recover_swaps()  # stream start: heal even if no batch fires
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src.writeStream.foreachBatch(apply_batch), checkpoint_dir)

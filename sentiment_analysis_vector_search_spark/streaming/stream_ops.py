@@ -23,6 +23,7 @@ from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -118,6 +119,46 @@ def _stream_confs(spark: SparkSession, state_partitions: str | None = None):
                 spark.conf.set(conf, old)
 
 
+def _drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    checkpoint_dir: str,
+    state_partitions: str | None = None,
+) -> None:
+    """Run ``writer`` (a configured DataStreamWriter) as one availableNow
+    drain checkpointed at ``checkpoint_dir``, and wait for it to finish.
+
+    Every streaming query in the package starts here, under
+    ``_stream_confs``. Re-running a drain with the same checkpoint resumes
+    after the last committed micro-batch.
+    """
+    with _stream_confs(spark, state_partitions):
+        q = (
+            writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+
+def _file_stream(
+    spark: SparkSession,
+    src_dir: str,
+    glob: str,
+    schema: StructType | str,
+    one_file_per_batch: bool,
+) -> DataFrame:
+    """Streaming parquet source over the files in ``src_dir`` matching
+    ``glob``. The source tracks the files it has processed, so a later
+    drain picks up only newly landed ones. ``one_file_per_batch`` makes
+    each file its own micro-batch (``maxFilesPerTrigger`` is a SOURCE
+    option; on the writer Spark ignores it)."""
+    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    return reader.parquet(src_dir)
+
+
 def _drain_to_memory(
     spark: SparkSession,
     df: DataFrame,
@@ -136,16 +177,12 @@ def _drain_to_memory(
     """
     sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
     ck = os.path.join(_session_ck_root(spark), sink)
-    with _stream_confs(spark, state_partitions):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(mode)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        df.writeStream.format("memory").queryName(sink).outputMode(mode),
+        ck,
+        state_partitions,
+    )
     out = spark.table(sink).localCheckpoint(eager=True)
     spark.catalog.dropTempView(sink)
     shutil.rmtree(ck, ignore_errors=True)
@@ -166,12 +203,9 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import normalize_event_ts, read_events_raw
 
     raw = read_events_raw(spark, sf_dir)
-    src = (
-        spark.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    return normalize_event_ts(
+        _file_stream(spark, sf_dir, "events.parquet", raw.schema, False)
     )
-    return normalize_event_ts(src)
 
 _STREAM_ORACLE = f"""
 SELECT date_trunc('hour', ts) AS window_start,
@@ -368,11 +402,7 @@ GROUP BY lang
 
 @register("stream_dedup_exact", oracle=_SDEDUP_ORACLE)
 def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, "documents.parquet", _DOC_SCHEMA, False)
     deduped = src.select("lang", F.md5("text").alias("text_hash")).dropDuplicates(
         ["lang", "text_hash"]
     )
@@ -486,11 +516,7 @@ FROM feat GROUP BY 1, 2
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline_ops import gate_columns
 
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = _file_stream(spark, sf_dir, "documents.parquet", _DOC_SCHEMA, False)
     gated = src.select("lang", gate_columns()["keep"].alias("keep"))
     agg = gated.groupBy("lang", "keep").agg(F.count(F.lit(1)).alias("n_docs"))
     return _drain_to_memory(spark, agg, "stream_qgate", "complete")

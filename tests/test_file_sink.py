@@ -1,5 +1,6 @@
 """Streaming file sink: exactly-once semantics under re-drain."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from sentiment_analysis_vector_search_spark.streaming.file_sink import (
@@ -128,10 +129,15 @@ def test_stream_rollup_maintenance_incremental(spark, sf_dir, tmp_path):
     assert_matches([f"{src_dir}/events.parquet", f"{src_dir}/events_2.parquet"])
 
 
-def test_stream_ingest_dedup_gates_against_history(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("drain_each_file", [True, False], ids=["drain_each", "one_drain"])
+def test_stream_ingest_dedup_gates_against_history(
+    spark, sf_dir, tmp_path, drain_each_file
+):
     """Two document files drained in order: the second batch's docs that
     near-duplicate the already-ingested corpus are dropped; survivors
-    join the index; re-drain is a no-op."""
+    join the index; re-drain is a no-op. Landing both files before a
+    single drain must give the same result: each file is its own
+    micro-batch, so the second is still gated against the first."""
     import os
     import shutil
 
@@ -158,7 +164,8 @@ def test_stream_ingest_dedup_gates_against_history(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ingest_ckpt")
 
     land(half1, "documents_a.parquet")
-    stream_ingest_dedup(spark, src_dir, idx, out, ckpt)
+    if drain_each_file:
+        stream_ingest_dedup(spark, src_dir, idx, out, ckpt)
     land(half2, "documents_b.parquet")
     stream_ingest_dedup(spark, src_dir, idx, out, ckpt)
 
@@ -737,3 +744,157 @@ def test_stream_grouped_histogram_maintenance_and_data_card_serving(
         for q, cname in ((0.5, "p50_chars"), (0.9, "p90_chars")):
             want = float(np.percentile(vals, q * 100, method="inverted_cdf"))
             assert abs(r[cname] - want) <= knobs["width"], (srcn, q)
+
+
+def test_stream_ivf_ingest_survives_torn_batch_record(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash while batch 1's record is being written must not wedge the
+    stream: the record is replaced atomically, so the next drain reads
+    the previous record, replays batch 1, and the index still equals a
+    full rebuild (no lost and no duplicated vectors)."""
+    import json
+    import os
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+
+    from sentiment_analysis_vector_search_spark.operators.similarity import (
+        build_ivf_index,
+    )
+    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
+        stream_ivf_ingest,
+    )
+
+    full_dir = str(tmp_path / "ivf_full")
+    build_ivf_index(spark, sf_dir, full_dir)
+    stream_idx = str(tmp_path / "ivf_stream")
+    shutil.copytree(f"{full_dir}/codebook", f"{stream_idx}/codebook")
+
+    src_dir = str(tmp_path / "emb_src")
+    os.makedirs(src_dir)
+    ckpt = str(tmp_path / "ivf_ckpt")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+    def land(pred, name):
+        stage = str(tmp_path / f"_{name}")
+        emb.where(pred).coalesce(1).write.parquet(stage)
+        part = next(n for n in os.listdir(stage) if n.endswith(".parquet"))
+        shutil.copy(os.path.join(stage, part), os.path.join(src_dir, name))
+
+    land(F.col("vec_id") % 2 == 0, "embeddings_a.parquet")
+    stream_ivf_ingest(spark, src_dir, stream_idx, ckpt)  # batch 0
+
+    real_dump = json.dump
+    record_writes = []
+
+    def torn_dump(obj, fp, *args, **kwargs):
+        if "_ivf_commits.json" in str(getattr(fp, "name", "")):
+            record_writes.append(obj)  # batch 1's record: tear it
+            fp.write(json.dumps(obj)[:3])
+            fp.flush()
+            raise OSError("injected crash mid-record")
+        return real_dump(obj, fp, *args, **kwargs)
+
+    land(F.col("vec_id") % 2 == 1, "embeddings_b.parquet")
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(StreamingQueryException):
+        stream_ivf_ingest(spark, src_dir, stream_idx, ckpt)  # dies in batch 1
+    monkeypatch.setattr(json, "dump", real_dump)
+    assert len(record_writes) == 1
+
+    stream_ivf_ingest(spark, src_dir, stream_idx, ckpt)  # replays batch 1
+
+    def rows(d):
+        return sorted(
+            (r.vec_id, r.cell)
+            for r in spark.read.parquet(f"{d}/assignments").collect()
+        )
+
+    assert rows(stream_idx) == rows(full_dir)
+
+
+def _package_asts():
+    import ast
+    import pathlib
+
+    import sentiment_analysis_vector_search_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    return {
+        str(p.relative_to(root)): ast.parse(p.read_text())
+        for p in sorted(root.rglob("*.py"))
+    }
+
+
+def _walk_scoped(tree):
+    """Yield (node, enclosing function names, enclosing plain-call names)."""
+    import ast
+
+    def walk(node, funcs, calls):
+        yield node, funcs, calls
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            funcs = funcs + (node.name,)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+            calls = calls + (node.func.id,)
+        for child in ast.iter_child_nodes(node):
+            yield from walk(child, funcs, calls)
+
+    yield from walk(tree, (), ())
+
+
+def test_streaming_queries_share_one_drain_skeleton():
+    """Structural guard: every streaming query in the package is built by
+    ``_file_stream`` and started by ``_drain``, and the ``*_commits.json``
+    batch records are touched only by the record helpers. A new drain that
+    hand-rolls readStream / writeStream…start / awaitTermination, or opens
+    a commits file itself, fails here."""
+    import ast
+
+    # attribute or string literal -> where it may appear: inside the body
+    # of a function ("def") or inside the arguments of a call ("call")
+    allowed = {
+        "readStream": ("def", "_file_stream"),
+        "maxFilesPerTrigger": ("def", "_file_stream"),
+        "awaitTermination": ("def", "_drain"),
+        "checkpointLocation": ("def", "_drain"),
+        "writeStream": ("call", "_drain"),
+    }
+    record_helpers = {"_batch_applied", "_record_batch"}
+    bad = []
+    for name, tree in _package_asts().items():
+        docstrings = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(
+                n, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            )
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        for node, funcs, calls in _walk_scoped(tree):
+            where = f"{name}:{getattr(node, 'lineno', '?')}"
+            key = None
+            if isinstance(node, ast.Attribute):
+                key = node.attr
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+            ):
+                key = node.value
+                if "_commits.json" in key and funcs[-1:] != ("_commits_path",):
+                    bad.append(f"{where}: commits path built outside _commits_path")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "_commits_path"
+                and not record_helpers & set(funcs)
+            ):
+                bad.append(f"{where}: commits file used outside the record helpers")
+            if key in allowed:
+                kind, owner = allowed[key]
+                if owner not in (funcs if kind == "def" else calls):
+                    bad.append(f"{where}: {key} outside {kind} {owner}")
+    assert not bad, "\n".join(bad)
