@@ -911,13 +911,13 @@ def main(argv: list[str] | None = None) -> int:
         import json
 
         from .session import get_spark
+        from .sinks import write_counted
         from .sources.warc import warc_documents
 
         spark = get_spark("cli-warc")
         spark.sparkContext.setLogLevel("ERROR")
         docs = warc_documents(spark, args.warc_path)
-        docs.write.mode("overwrite").parquet(args.out_dir)
-        n = spark.read.parquet(args.out_dir).count()
+        n = write_counted(docs, args.out_dir)
         print(json.dumps({"documents": n, "out": args.out_dir}))
         return 0
 
@@ -925,6 +925,7 @@ def main(argv: list[str] | None = None) -> int:
         import json
 
         from .session import get_spark
+        from .sinks import write_counted
         from .sources.sqlite_store import (
             read_sqlite_comments,
             read_sqlite_extracted_text,
@@ -955,8 +956,7 @@ def main(argv: list[str] | None = None) -> int:
                 min_score=args.min_score,
                 min_length=args.min_length,
             )
-        docs.write.mode("overwrite").parquet(args.out_dir)
-        n = spark.read.parquet(args.out_dir).count()
+        n = write_counted(docs, args.out_dir)
         print(json.dumps({"documents": n, "out": args.out_dir}))
         return 0
 

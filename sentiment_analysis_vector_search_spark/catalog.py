@@ -172,17 +172,32 @@ def corpus_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     through a RELIABLE ``checkpoint`` into that directory instead: the
     write crosses the network once, but blocks survive executor loss.
     Default behavior (unset) is byte-identical to before — the flag is a
-    deployment posture knob, not a semantics change.
+    deployment posture knob, not a semantics change. The variable is read
+    on every call: when it names another directory than the one the
+    session checkpoints into, the checkpoint dir is re-pointed there.
     """
     import os
 
     ckdir = os.environ.get("SPARK_GRAFT_RELIABLE_CK_DIR")
     if ckdir:
         sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
+        if not _checkpoints_into(sc, ckdir):
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def _checkpoints_into(sc, ckdir: str) -> bool:
+    """Whether ``sc`` checkpoints into ``ckdir`` (``setCheckpointDir``
+    makes a fresh ``<ckdir>/<uuid>`` subdirectory, so compare its parent
+    with ``ckdir`` qualified the same way)."""
+    cur = sc.getCheckpointDir()
+    if cur is None:
+        return False
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    want = Path(ckdir)
+    fs = want.getFileSystem(sc._jsc.hadoopConfiguration())
+    return Path(cur).getParent().equals(fs.makeQualified(want))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

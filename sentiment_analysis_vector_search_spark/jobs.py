@@ -18,7 +18,17 @@ driver/oracle-verified), artifacts land as parquet under
 LAST, so a manifest's existence is the success marker (the ``jobs_db``
 status record of the reference; a crashed job leaves no manifest and its
 directory is re-runnable or expirable). There is no driver-side data
-movement: counts come from the stage writes' committed files.
+movement and no re-read: each stage's row count comes from its write
+itself (``sinks.write_counted``), not from scanning the committed files
+again.
+
+Classify once: the reference classifies each review once and then
+aggregates the labels. The job does the same — it runs its stages inside
+``sentiment_ops.classify_once``, so the first stage that needs labels
+scans and classifies ``documents`` into one lineage cut, and every later
+``classified()`` call of the job reads that cut (one documents scan per
+job instead of one per consumer). The operators themselves are the
+registered ones, unchanged; outside a job they keep their own plans.
 
 Scale: stages share the session; each artifact write is an independent
 action over operator plans that are themselves scale-audited. At 100 TB
@@ -62,7 +72,9 @@ def run_analysis_job(
     counts and status — the success marker, written only after every
     stage committed.
     """
+    from .operators.sentiment_ops import classify_once
     from .registry import QUERIES, load_all_modules
+    from .sinks import write_counted
 
     load_all_modules()
     job_dir = os.path.join(jobs_root, job_id)
@@ -71,12 +83,10 @@ def run_analysis_job(
     # commit its manifest.
     os.makedirs(job_dir, exist_ok=True)
     counts: dict[str, int] = {}
-    for stage in stages:
-        df: DataFrame = QUERIES[stage](spark, sf_dir)
-        out = os.path.join(job_dir, stage)
-        df.write.mode("overwrite").parquet(out)
-        # count from the committed files, not a recompute of the plan
-        counts[stage] = spark.read.parquet(out).count()
+    with classify_once(spark, sf_dir):
+        for stage in stages:
+            df: DataFrame = QUERIES[stage](spark, sf_dir)
+            counts[stage] = write_counted(df, os.path.join(job_dir, stage))
     manifest = {
         "job_id": job_id,
         "status": "succeeded",

@@ -34,14 +34,13 @@ from pyspark.sql import functions as F
 from ..catalog import corpus_cut, fan_out, table
 from ..functions.hashing import (
     MOD31,
-    md5_int31,
     md5_long,
     minhash_params,
     sql_md5_int31,
     sql_md5_long,
 )
 from ..functions.stable import davg, sql_davg
-from ..functions.vectors import hyperplanes, spark_plane_dot, sql_plane_dot
+from ..functions.vectors import hyperplanes, sql_plane_dot
 from ..registry import register
 
 # ---------------------------------------------------------------------------

@@ -13,15 +13,48 @@ classify expressions run in whole-stage codegen; nothing leaves the JVM.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, table
+from ..catalog import corpus_cut, fan_out, table
 from ..functions import sentiment as S
 from ..functions.stable import dsum, sql_dsum
 from ..registry import register
 
 BASE_RATE = 5000.0  # insurance_calculator.py:16
+
+
+@dataclass
+class _JobShare:
+    spark: SparkSession
+    sf_dir: str
+    cut: DataFrame | None = None
+
+
+# The analysis job running in this context (``classify_once``), if any.
+_JOB_SHARE: ContextVar[_JobShare | None] = ContextVar("_JOB_SHARE", default=None)
+
+
+@contextmanager
+def classify_once(spark: SparkSession, sf_dir: str) -> Iterator[None]:
+    """Share one classified cut of ``sf_dir`` across a composed job.
+
+    While the block runs, every ``classified(spark, sf_dir)`` call in this
+    context returns the same lineage cut (built on first use), so a job
+    whose stages all start from the labels scans and classifies
+    ``documents`` once instead of once per consumer. The share ends with
+    the block, also when a stage raises; other contexts, other dirs and
+    calls outside the block keep their own plans."""
+    token = _JOB_SHARE.set(_JobShare(spark, sf_dir))
+    try:
+        yield
+    finally:
+        _JOB_SHARE.reset(token)
 
 
 def classified(spark: SparkSession, sf_dir: str, fan: bool = False) -> DataFrame:
@@ -35,7 +68,24 @@ def classified(spark: SparkSession, sf_dir: str, fan: bool = False) -> DataFrame
     Aggregating consumers (sent_trends, pipeline_curate_stats, the kmeans
     fit) must keep the default: their own exchange already redistributes
     the work, and a second full-corpus shuffle is pure cost.
+
+    Inside ``classify_once(spark, sf_dir)`` (the analysis job) every call
+    returns the job's shared cut instead, whatever ``fan`` says: the cut
+    IS a terminal output — classified once with ``fan=True`` and
+    materialized by ``corpus_cut`` — so the one round-robin shuffle
+    spreads the regexps over all cores and every stage after it reads the
+    cut's evenly spread blocks without re-scanning or re-classifying.
+    ``text`` stays in the cut (summarize_prompts and top_words read it).
     """
+    share = _JOB_SHARE.get()
+    if share is not None and share.spark is spark and share.sf_dir == sf_dir:
+        if share.cut is None:
+            share.cut = corpus_cut(_classify(spark, sf_dir, fan=True), eager=True)
+        return share.cut
+    return _classify(spark, sf_dir, fan)
+
+
+def _classify(spark: SparkSession, sf_dir: str, fan: bool) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     if fan:
         docs = fan_out(spark, docs)

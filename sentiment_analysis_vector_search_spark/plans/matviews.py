@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sinks import write_counted
+
 _DEC = "decimal(30,10)"
 _ANSWERABLE = ("sum", "count", "avg", "min", "max")
 
@@ -169,8 +171,7 @@ def rollup_compact(spark: SparkSession, out_dir: str) -> int:
     compacted = rolled.groupBy(*m["dims"]).agg(*aggs).select(*rolled.columns)
     tmp_new = f"{out_dir}__compact__"
     tmp_old = f"{out_dir}__old__"
-    compacted.write.mode("overwrite").parquet(tmp_new)
-    n = spark.read.parquet(tmp_new).count()
+    n = write_counted(compacted, tmp_new)
     with open(os.path.join(tmp_new, "_rollup_manifest.json"), "w") as f:
         json.dump(m, f, indent=1, sort_keys=True)
     os.rename(out_dir, tmp_old)

@@ -15,13 +15,15 @@ writers make layout explicit:
   layout a downstream training-data loader wants.
 
 Both return the reloaded DataFrame so callers can assert round-trips.
+``write_counted`` instead returns the number of rows it wrote, counted by
+the write job itself: the composed flows record it in their manifests.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -105,6 +107,24 @@ def write_training_shards(
 
 def read_back(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def write_counted(
+    df: DataFrame, path: str, partition_by: Sequence[str] = ()
+) -> int:
+    """Overwrite ``path`` with ``df`` as parquet and return the rows written.
+
+    The count is the write's own: an ``Observation`` rides the write job
+    (a ``CollectMetrics`` node above the plan, in the result stage, whose
+    accumulators Spark applies once per successful task), so no second
+    job re-reads the committed files or recomputes the plan. An empty
+    ``df`` counts 0."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return obs.get["rows"]
 
 
 def write_bucketed(

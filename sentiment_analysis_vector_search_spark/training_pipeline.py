@@ -18,6 +18,13 @@ never re-pays stages 1-3. The manifest write is atomic (tmp + replace)
 and happens only AFTER the stage's parquet is fully written, so a crash
 mid-stage leaves the stage unmarked and the re-run redoes it.
 
+Row counts: a stage's ``rows_out`` is the row count of its own write
+(``sinks.write_counted`` observes it during the write; nothing re-reads
+the committed files). Its ``rows_in`` is the ``rows_out`` of the stage
+whose directory it reads, taken from the manifest — also on a resumed
+run, where that stage finished in an earlier process. Only ``gate``
+counts its input, the raw corpus no stage wrote.
+
 Stage semantics (each citing the operator that owns the logic):
 
 1. ``gate`` — drop docs failing the C4-style quality gate
@@ -60,6 +67,7 @@ from pyspark.sql import functions as F
 
 from . import catalog
 from .catalog import table
+from .sinks import write_counted
 
 STAGES = (
     "gate",
@@ -93,13 +101,13 @@ def _mark(out_root: str, manifest: dict, stage: str, entry: dict) -> None:
 
 
 def _write_docs(docs: DataFrame, stage_dir: str) -> int:
-    """Materialize a stage's surviving documents as a valid sf_dir."""
+    """Materialize a stage's surviving documents as a valid sf_dir;
+    returns the rows written."""
     os.makedirs(stage_dir, exist_ok=True)
-    out = os.path.join(stage_dir, "documents.parquet")
-    docs.write.mode("overwrite").parquet(out)
+    n = write_counted(docs, os.path.join(stage_dir, "documents.parquet"))
     # a resumed re-write must not serve a stale memoized file listing
     catalog.refresh(docs.sparkSession, stage_dir)
-    return docs.sparkSession.read.parquet(out).count()
+    return n
 
 
 def run_training_pipeline(
@@ -147,7 +155,8 @@ def run_training_pipeline(
         kept = docs.join(
             survivors.unionByName(no_candidates).distinct(), "doc_id"
         )
-        n_in, n_out = docs.count(), _write_docs(kept, stage_dir("dedup"))
+        n_in = man["gate"]["rows_out"]
+        n_out = _write_docs(kept, stage_dir("dedup"))
         _mark(out_root, man, "dedup", {"rows_in": n_in, "rows_out": n_out,
                                        "seconds": round(time.perf_counter() - t0, 2)})
     cur = stage_dir("dedup")
@@ -169,9 +178,8 @@ def run_training_pipeline(
             .select("doc_id")
         )
         kept = docs.join(bad, "doc_id", "left_anti")
-        n_in, n_out = docs.count(), _write_docs(
-            kept, stage_dir("decontaminate_exact")
-        )
+        n_in = man["dedup"]["rows_out"]
+        n_out = _write_docs(kept, stage_dir("decontaminate_exact"))
         _mark(out_root, man, "decontaminate_exact",
               {"rows_in": n_in, "rows_out": n_out,
                "seconds": round(time.perf_counter() - t0, 2)})
@@ -187,7 +195,8 @@ def run_training_pipeline(
             .select("doc_id")
         )
         kept = docs.join(clean, "doc_id")
-        n_in, n_out = docs.count(), _write_docs(kept, stage_dir("decontaminate"))
+        n_in = man["decontaminate_exact"]["rows_out"]
+        n_out = _write_docs(kept, stage_dir("decontaminate"))
         _mark(out_root, man, "decontaminate",
               {"rows_in": n_in, "rows_out": n_out,
                "seconds": round(time.perf_counter() - t0, 2)})
@@ -202,7 +211,8 @@ def run_training_pipeline(
         kept = docs.join(F.broadcast(rates), "source").where(
             u < F.col("sampling_rate")
         ).select(*docs.columns)
-        n_in, n_out = docs.count(), _write_docs(kept, stage_dir("mix"))
+        n_in = man["decontaminate"]["rows_out"]
+        n_out = _write_docs(kept, stage_dir("mix"))
         _mark(out_root, man, "mix", {"rows_in": n_in, "rows_out": n_out,
                                      "seconds": round(time.perf_counter() - t0, 2)})
     cur = stage_dir("mix")
@@ -213,8 +223,7 @@ def run_training_pipeline(
         packed = pack_sequences(spark, cur)
         pdir = stage_dir("pack")
         os.makedirs(pdir, exist_ok=True)
-        packed.write.mode("overwrite").parquet(os.path.join(pdir, "sequences.parquet"))
-        n = spark.read.parquet(os.path.join(pdir, "sequences.parquet")).count()
+        n = write_counted(packed, os.path.join(pdir, "sequences.parquet"))
         _mark(out_root, man, "pack",
               {"rows_out": n, "seconds": round(time.perf_counter() - t0, 2)})
 
@@ -226,15 +235,11 @@ def run_training_pipeline(
             train_shuffle_shards(spark, cur).select("doc_id", "shard"), "doc_id"
         )
         sdir = os.path.join(stage_dir("shards"), "documents.parquet")
-        (
-            sharded.repartition(F.col("shard"))
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(sdir)
+        n = write_counted(
+            sharded.repartition(F.col("shard")), sdir, partition_by=("shard",)
         )
-        n = spark.read.parquet(sdir).count()
         _mark(out_root, man, "shards",
-              {"rows_in": docs.count(), "rows_out": n,
+              {"rows_in": man["mix"]["rows_out"], "rows_out": n,
                "seconds": round(time.perf_counter() - t0, 2)})
 
     # release-notes artifact: the dataset card of what actually shipped

@@ -269,3 +269,35 @@ def test_corpus_cut_reliable_checkpoint_hatch(spark, tmp_path, monkeypatch):
             hit = True
             break
     assert hit, f"no reliable checkpoint files under {ckdir}"
+
+
+def test_corpus_cut_repoints_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """A changed SPARK_GRAFT_RELIABLE_CK_DIR takes effect on the next
+    corpus_cut: the session's checkpoint dir is re-pointed into the new
+    directory instead of staying wherever an earlier call put it."""
+    import os
+
+    from sentiment_analysis_vector_search_spark.catalog import corpus_cut
+
+    df = spark.range(50).selectExpr("id", "id + 1 AS v")
+    want = sorted((r.id, r.v) for r in df.collect())
+
+    def files_under(d: str) -> int:
+        return sum(len(files) for _root, _dirs, files in os.walk(d))
+
+    first, second = str(tmp_path / "ck_first"), str(tmp_path / "ck_second")
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CK_DIR", first)
+    assert sorted((r.id, r.v) for r in corpus_cut(df, eager=True).collect()) == want
+    assert files_under(first) > 0
+    n_first = files_under(first)
+
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CK_DIR", second)
+    assert sorted((r.id, r.v) for r in corpus_cut(df, eager=True).collect()) == want
+    assert files_under(second) > 0, "checkpoint dir was not re-pointed"
+    assert files_under(first) == n_first
+    assert os.path.dirname(spark.sparkContext.getCheckpointDir()).endswith("ck_second")
+
+    # an unchanged variable keeps the dir (no fresh uuid subdir per call)
+    ck = spark.sparkContext.getCheckpointDir()
+    corpus_cut(df, eager=True)
+    assert spark.sparkContext.getCheckpointDir() == ck

@@ -199,3 +199,83 @@ def test_cli_pq_and_ivfpq_refresh_verbs(spark, sf_dir, tmp_path, capsys):
         assert rc == 0
         rows = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert 0 < len(rows) <= 5
+
+
+@pytest.fixture
+def documents_lookups(monkeypatch):
+    """Directories ``classified`` looked ``documents`` up in, in order."""
+    from sentiment_analysis_vector_search_spark.operators import sentiment_ops
+
+    seen: list[str] = []
+    real = sentiment_ops.table
+
+    def counting(spark_, sf_dir_, name):
+        if name == "documents":
+            seen.append(sf_dir_)
+        return real(spark_, sf_dir_, name)
+
+    monkeypatch.setattr(sentiment_ops, "table", counting)
+    return seen
+
+
+def test_job_classifies_documents_once(spark, sf_dir, tmp_path, documents_lookups):
+    """All 8 stages start from the labels; the job reads documents through
+    classified ONCE and every stage shares that cut. The share ends with
+    the job: a later classified() call builds from documents again."""
+    from sentiment_analysis_vector_search_spark.operators.sentiment_ops import (
+        classified,
+    )
+
+    run_analysis_job(spark, sf_dir, str(tmp_path / "jobs"), "once")
+    assert documents_lookups == [sf_dir]
+
+    classified(spark, sf_dir)
+    assert documents_lookups == [sf_dir, sf_dir]
+
+
+def test_job_share_ends_when_a_stage_raises(
+    spark, sf_dir, tmp_path, documents_lookups, monkeypatch
+):
+    from sentiment_analysis_vector_search_spark import registry
+    from sentiment_analysis_vector_search_spark.operators.sentiment_ops import (
+        classified,
+    )
+
+    shared = []
+
+    def failing_stage(spark_, sf_dir_):
+        shared.append(classified(spark_, sf_dir_))
+        shared.append(classified(spark_, sf_dir_, fan=True))
+        raise RuntimeError("stage failed")
+
+    registry.load_all_modules()
+    monkeypatch.setitem(registry.QUERIES, "failing_stage", failing_stage)
+    jobs_root = str(tmp_path / "jobs")
+    with pytest.raises(RuntimeError, match="stage failed"):
+        run_analysis_job(
+            spark, sf_dir, jobs_root, "crash", stages=("run_metrics", "failing_stage")
+        )
+    # inside the job both calls got run_metrics' cut: one lookup so far
+    assert shared[0] is shared[1]
+    assert documents_lookups == [sf_dir]
+    assert list_jobs(jobs_root) == [{"job_id": "crash", "status": "incomplete"}]
+
+    after = classified(spark, sf_dir)
+    assert after is not shared[0]
+    assert documents_lookups == [sf_dir, sf_dir]
+
+
+def test_job_manifest_counts_zero_row_artifacts(spark, sf_dir, tmp_path):
+    """Over an empty corpus each stage count in the manifest is still the
+    row count of the committed artifact, 0 where the artifact is empty."""
+    empty_dir = str(tmp_path / "empty_sf")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0).write.parquet(
+        os.path.join(empty_dir, "documents.parquet")
+    )
+    jobs_root = str(tmp_path / "jobs")
+    manifest = run_analysis_job(spark, empty_dir, jobs_root, "empty")
+    for stage, n in manifest["stages"].items():
+        art = spark.read.parquet(os.path.join(jobs_root, "empty", stage))
+        assert art.count() == n, stage
+    assert manifest["stages"]["sent_classify"] == 0
+    assert manifest["stages"]["top_words"] == 0

@@ -89,3 +89,44 @@ def test_pipeline_resumes_after_partial_run(spark, sf_dir, tmp_path):
     assert os.path.getmtime(os.path.join(out, "gate")) == gate_mtime
     assert man2["mix"]["rows_out"] == man["mix"]["rows_out"]
     assert man2["shards"]["rows_out"] == man["shards"]["rows_out"]
+
+
+def test_manifest_counts_are_the_written_rows(spark, sf_dir, tmp_path):
+    """Every count in the manifest equals a re-read of the committed
+    output: rows_out of each stage's own write (the shard-partitioned
+    layout included), rows_in of the output the stage read. A run resumed
+    after a crash records the same counts, taking rows_in of its first
+    redone stage from the manifest an earlier run wrote."""
+    out = str(tmp_path / "pipe")
+
+    def written(stage: str) -> int:
+        name = "sequences.parquet" if stage == "pack" else "documents.parquet"
+        return spark.read.parquet(os.path.join(out, stage, name)).count()
+
+    read_from = {
+        "dedup": "gate",
+        "decontaminate_exact": "dedup",
+        "decontaminate": "decontaminate_exact",
+        "mix": "decontaminate",
+        "shards": "mix",
+    }
+    n_raw = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+
+    def counts(man: dict) -> dict:
+        return {s: (man[s].get("rows_in"), man[s]["rows_out"]) for s in STAGES}
+
+    man = run_training_pipeline(spark, sf_dir, out)
+    want = {
+        s: (written(read_from[s]) if s in read_from else None, written(s))
+        for s in STAGES
+    }
+    want["gate"] = (n_raw, written("gate"))
+    assert counts(man) == want
+
+    # crash after dedup: the later stages are redone by a fresh run
+    j = json.load(open(os.path.join(out, "manifest.json")))
+    for s in STAGES[2:]:
+        del j[s]
+    json.dump(j, open(os.path.join(out, "manifest.json"), "w"))
+    man2 = run_training_pipeline(spark, sf_dir, out)
+    assert counts(man2) == want
